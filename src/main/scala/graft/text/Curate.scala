@@ -20,15 +20,15 @@ object Curate {
     * needed anywhere.
     *
     * Scale shape, stage by stage: the Gopher gate and language ID
-    * are shuffle-free token-fold sweeps ([[TextOps.gopherRules]] /
-    * [[TextOps.langId]]); exact dedup is ONE shuffle on md5(text)
-    * collapsed map-side, with the keeper join running doc_id ⋈
-    * doc_id (co-partitioned with the gate join before it, so AQE
-    * reuses the exchange); the final stats are a partial aggregate
-    * over the handful of (lang, source) cells. Nothing in the chain
-    * widens: the gate drops rows before the dedup shuffle, and the
-    * dedup drops rows before language scoring — each stage shrinks
-    * the data the next one pays for. */
+    * are ONE shuffle-free typed pass ([[TextOps.docStats]]) — language
+    * ID is per-document, so scoring before dedup keeps the same rows
+    * and `predicted` rides through the dedup joins as a column; exact
+    * dedup is ONE shuffle on md5(text) collapsed map-side, with the
+    * keeper join running doc_id ⋈ doc_id (co-partitioned with the gate
+    * join before it, so AQE reuses the exchange); the final stats are a
+    * partial aggregate over the handful of (lang, source) cells. The
+    * gate drops rows before the dedup shuffle, which drops rows before
+    * the final aggregate — each stage shrinks the data the next pays for. */
   def curationPipeline(documents: DataFrame, minWords: Int = 50,
                        minStopwords: Int = 2): DataFrame = {
     require(minStopwords >= 0, s"need minStopwords >= 0, got $minStopwords")
@@ -44,17 +44,15 @@ object Curate {
     // words); a corpus without them — multilingual, or synthetic
     // word-salad like the testdata — tunes it down rather than
     // discarding everything. The other four rules stay as declared.
-    val gate = TextOps.gopherRules(documents, minWords)
+    val gate = TextOps.gopherFlags(TextOps.docStats(documents), minWords)
       .filter(col("ok_word_count") && col("ok_mean_len") && col("ok_symbol_ratio") &&
         col("ok_alpha_ratio") && col("n_stopwords") >= minStopwords)
-      .select(col("doc_id"), col("n_words"))
-    // scoped caches (r15): `kept` is read by BOTH the dedup-rep
-    // subtree and the keeper join, and `uniq` by BOTH the language-ID
-    // fold and the final join — without them each self-join re-planned
-    // its entire upstream (the r15 before-plan scanned documents 8×,
-    // re-running the Gopher token fold up to 4×). The caches hold the
-    // already-gated (then already-deduped) slices — the smallest
-    // frames in the chain — and release on the query's own action.
+      .select(col("doc_id"), col("n_words"), TextOps.predictedLang)
+    // scoped cache (r15): `kept` is read by BOTH the dedup-rep
+    // subtree and the keeper join — without it the self-join re-plans
+    // its entire upstream (the r15 before-plan scanned documents 8×).
+    // It holds the already-gated slice and releases on the query's
+    // own action.
     val kept = Dedup.registerCache(documents.join(gate, "doc_id"))
     // THE library's exact-dedup operator, not an inline re-spelling
     // (the docstring's "each stage the library's own operator" is a
@@ -62,9 +60,7 @@ object Curate {
     // NULL-text group semantics are pinned in NullInputSpec, and an
     // inline copy would silently drift if they ever change)
     val reps = Dedup.exactDedup(kept).select(col("keep_id").as("doc_id"))
-    val uniq = Dedup.registerCache(kept.join(reps, "doc_id"))
-    val lang = TextOps.langId(uniq).select(col("doc_id"), col("predicted"))
-    uniq.join(lang, "doc_id")
+    kept.join(reps, "doc_id")
       .groupBy(col("predicted").as("lang_pred"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_words")).cast(LongType).as("n_tokens"),

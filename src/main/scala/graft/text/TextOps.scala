@@ -8,10 +8,10 @@ import graft.core.Ops
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language-ID, quality scoring, token counting,
-  * document fingerprinting. All pure column expressions (whole-stage
-  * codegen, no UDFs) — each runs embarrassingly parallel over
-  * partitions with zero shuffle, which is exactly what a 100 TB
-  * document sweep needs.
+  * document fingerprinting. Column expressions plus typed per-row
+  * maps where Catalyst would run per-token lambdas interpreted; no
+  * UDFs — each runs embarrassingly parallel over partitions with
+  * zero shuffle, which is what a 100 TB document sweep needs.
   */
 object TextOps {
 
@@ -68,21 +68,26 @@ object TextOps {
       .filter(col("doc_id").isNotNull).as[(Long, String)]
   }
 
-  /** (doc_id, text, toks) with the token array materialized ONCE per
-    * row by a typed map. The operators below reference the token list
-    * 3–5× per row; as a derived *expression* column those references
-    * each re-run split() under projection collapse (SCALING.md
-    * optimizer pitfall #1), while an attribute produced by a per-row
-    * closure is tokenized exactly once and stays fully distributed. */
-  private def tokenized(documents: DataFrame): DataFrame = {
+  /** [[docIdText]] plus `lang` ("" on lang-less frames). */
+  private def docLangText(documents: DataFrame): org.apache.spark.sql.Dataset[(Long, String, String)] = {
     import documents.sparkSession.implicits._
-    // lang rides along for langId; tolerate lang-less frames (the
-    // stats/quality operators don't require one)
     val base = if (documents.columns.contains("lang")) documents
                else documents.withColumn("lang", lit(""))
     base.select(col("doc_id"), col("lang"), col("text"))
       .filter(col("doc_id").isNotNull) // silent-drop convention (docIdText)
       .as[(Long, String, String)]
+  }
+
+  /** (doc_id, lang, text, toks) with the token array materialized
+    * ONCE per row by a typed map. The operators below reference the
+    * token list 3–5× per row; as a derived *expression* column those
+    * references each re-run split() under projection collapse
+    * (SCALING.md optimizer pitfall #1), while an attribute produced
+    * by a per-row closure is tokenized exactly once and stays fully
+    * distributed. */
+  private def tokenized(documents: DataFrame): DataFrame = {
+    import documents.sparkSession.implicits._
+    docLangText(documents)
       .map { case (id, lang, text) => (id, lang, text, tokensOf(text)) }
       .toDF("doc_id", "lang", "text", "toks")
   }
@@ -238,44 +243,30 @@ object TextOps {
   private val EsMarkers = Seq("el", "la", "de", "y")
   private val DeMarkers = Seq("der", "die", "das", "und")
 
-  /** Case-insensitive: the tokenizer does not lowercase, and the
-    * marker lists are high-frequency FUNCTION words that real cased
-    * text capitalizes sentence-initially ("The", "El", "Der") —
-    * case-sensitive matching would systematically deflate exactly
-    * the strongest markers, and disagree with [[gopherRules]], which
-    * lowercases before its stopword test. Oracle twin: `lower(x)`
-    * inside each `list_contains`. */
-  private def markerCount(toks: Column, markers: Seq[String]): Column =
-    size(filter(toks, t => array_contains(typedLit(markers), lower(t)))).cast(LongType)
+  /** Argmax over the [[docStats]] marker scores, tie order en > es > de. */
+  private[text] val predictedLang: Column =
+    when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de"), "en")
+      .when(col("s_es") >= col("s_de"), "es")
+      .otherwise("de").as("predicted")
 
   /** N-gram-style language-ID heuristic: score text against per-
     * language marker-token lists, argmax with a fixed tie order.
     * Deterministic and shuffle-free; a real model slots in as a
-    * richer scoring expression with the same shape.
+    * richer scoring kernel with the same shape.
     */
-  def langId(documents: DataFrame): DataFrame = {
-    val toks = col("toks")
-    tokenized(documents)
-      .select(
-        col("doc_id"), col("lang"),
-        markerCount(toks, EnMarkers).as("s_en"),
-        markerCount(toks, EsMarkers).as("s_es"),
-        markerCount(toks, DeMarkers).as("s_de"))
-      .withColumn("predicted",
-        when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de"), "en")
-          .when(col("s_es") >= col("s_de"), "es")
-          .otherwise("de"))
-  }
+  def langId(documents: DataFrame): DataFrame =
+    docStats(documents).select(col("doc_id"), col("lang"), col("s_en"), col("s_es"),
+      col("s_de"), predictedLang)
 
-  /** The quality blend over a token-array column — shared by
+  /** The quality blend over [[docStats]] counts — shared by
     * [[qualityScore]] and [[qualityNtile]] so the definition cannot
     * drift. Deliberately UNROUNDED and exp-free: both engines
     * evaluate this fixed-order IEEE expression bit-identically, while
     * round() disagrees on decimal-boundary doubles (Spark BigDecimal
     * HALF_UP vs DuckDB float rounding — observed as a 1-ulp mismatch
     * at sf0.1). */
-  private def qualityExpr(toks: Column): Column = {
-    val nTok = size(toks).cast(DoubleType)
+  private def qualityExpr: Column = {
+    val nTok = col("n_words").cast(DoubleType)
     // nullif guard: a token-less document would divide by zero —
     // a WHOLE-JOB abort under Spark 4's default ANSI mode. Dividing
     // by NULL instead propagates NULL quality, which is ALSO what
@@ -283,33 +274,25 @@ object TextOps {
     // edits. Token-less docs therefore carry NULL quality/ratios;
     // gate them out upstream before feeding ranked cuts (ntile
     // null-ordering differs across engines).
-    val nTokSafe = nullif(nTok, lit(0.0))
-    val sumLen = aggregate(transform(toks, t => length(t).cast(LongType)), lit(0L), (a, x) => a + x)
-    val meanTok = sumLen.cast(DoubleType) / nTokSafe
+    val meanTok = col("sum_word_len").cast(DoubleType) / nullif(nTok, lit(0.0))
     lit(0.4) * least(nTok / 100.0, lit(1.0)) +
-      lit(0.4) * stopRatioExpr(toks) +
+      lit(0.4) * stopRatioExpr +
       lit(0.2) * least(meanTok / 10.0, lit(1.0))
   }
 
-  /** The stop-ratio term of [[qualityExpr]], shared with
-    * [[qualityScore]]'s reported column so the two cannot drift
-    * (same nullif guard: token-less → NULL). */
-  private def stopRatioExpr(toks: Column): Column =
-    markerCount(toks, EnMarkers).cast(DoubleType) /
-      nullif(size(toks).cast(DoubleType), lit(0.0))
+  /** The stop-ratio term of [[qualityExpr]] over [[docStats]] counts,
+    * shared with [[qualityScore]]'s reported column so the two cannot
+    * drift (same nullif guard: token-less → NULL). */
+  private def stopRatioExpr: Column =
+    col("s_en").cast(DoubleType) / nullif(col("n_words").cast(DoubleType), lit(0.0))
 
   /** Heuristic quality score in [0,1]: linear blend of token count,
     * stopword ratio, and mean token length (deliberately exp-free so
     * the arithmetic is bit-reproducible across engines).
     */
-  def qualityScore(documents: DataFrame): DataFrame = {
-    val toks = col("toks")
-    tokenized(documents).select(
-      col("doc_id"),
-      size(toks).cast(LongType).as("n_tokens"),
-      stopRatioExpr(toks).as("stop_ratio"),
-      qualityExpr(toks).as("quality"))
-  }
+  def qualityScore(documents: DataFrame): DataFrame =
+    docStats(documents).select(col("doc_id"), col("n_words").as("n_tokens"),
+      stopRatioExpr.as("stop_ratio"), qualityExpr.as("quality"))
 
   /** Per-language quality percentile buckets — the "keep the top 20%
     * of each language" filter of a curation pipeline, as a reusable
@@ -329,8 +312,8 @@ object TextOps {
   def qualityNtile(documents: DataFrame, n: Int = 10, relErr: Double = 0.0): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
     require(relErr >= 0.0 && relErr < 0.5, s"need relErr in [0, 0.5), got $relErr")
-    val scored = tokenized(documents)
-      .select(col("doc_id"), col("lang"), qualityExpr(col("toks")).as("quality"))
+    val scored = docStats(documents)
+      .select(col("doc_id"), col("lang"), qualityExpr.as("quality"))
     if (relErr == 0.0) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang")).orderBy(col("quality").desc, col("doc_id"))
@@ -986,50 +969,49 @@ object TextOps {
   val GopherStopwords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
-  /** Gopher-style document quality rules (Rae et al. 2021 §A1.1):
-    * word count within [minWords, maxWords], mean word length within
-    * [3, 10], symbol-to-word ratio (`#` and ASCII `...`) at most
-    * 1/10, at least 80% of words containing an ASCII letter, and at
-    * least two distinct stopwords present. Paper bounds are 50 to
-    * 100k words.
-    *
-    * Every ratio threshold is evaluated by INTEGER cross-
-    * multiplication (e.g. `5·n_alpha >= 4·n_words`, `3·n <=
-    * sum_len <= 10·n`), so the operator carries no float contract —
-    * the counts and flags hash-match any engine bit-for-bit, and an
-    * empty document can't hit a 0/0 (it just fails the word-count
-    * rule). Shuffle-free codegen'd column pass. Returns (doc_id,
-    * n_words, sum_word_len, n_alpha_words, n_symbols, n_stopwords,
-    * five ok_* flags, gopher_keep). */
-  def gopherRules(documents: DataFrame, minWords: Int = 50,
-                  maxWords: Int = 100000): DataFrame = {
+  /** Per-word classes for [[docStats]] by Locale.ROOT-lowercased
+    * word: bit i < 8 = Gopher stopword i, bits 8–10 = en/es/de marker. */
+  private val WordClass: Map[String, Int] =
+    (GopherStopwords.zipWithIndex.map { case (w, i) => w -> (1 << i) } ++
+      Seq(EnMarkers, EsMarkers, DeMarkers).zipWithIndex
+        .flatMap { case (ws, l) => ws.map(_ -> (1 << (8 + l))) })
+      .groupMapReduce(_._1)(_._2)(_ | _)
+
+  /** The per-document kernel behind [[gopherRules]], [[langId]] and
+    * the quality scores: ONE typed pass over [[tokensOf]] (Catalyst
+    * runs the equivalent array lambdas interpreted, row by row)
+    * emitting (doc_id, lang, n_words, sum_word_len, n_alpha_words,
+    * n_symbols, n_stopwords, s_en, s_es, s_de). Bit-identical to the
+    * expression forms and the DuckDB oracles (`DocStatsParitySpec`):
+    * lengths in code points, alpha = has an ASCII letter, n_symbols =
+    * `#`s + non-overlapping `...`s (null for null text), stopwords
+    * DISTINCT, markers every occurrence. Both case-INSENSITIVE
+    * (toLowerCase(Locale.ROOT)): the marker lists are function words
+    * that cased text capitalizes sentence-initially ("The", "El"). */
+  private[text] def docStats(documents: DataFrame): DataFrame = {
+    import documents.sparkSession.implicits._
+    docLangText(documents).mapPartitions(_.map { case (id, lang, text) =>
+      var nWords, sumLen, nAlpha, sEn, sEs, sDe, stop = 0L
+      tokensOf(text).foreach { w =>
+        nWords += 1
+        sumLen += w.codePointCount(0, w.length)
+        if (w.exists(c => (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z'))) nAlpha += 1
+        val cls = WordClass.getOrElse(w.toLowerCase(java.util.Locale.ROOT), 0)
+        stop |= cls & 0xFF
+        sEn += (cls >> 8) & 1; sEs += (cls >> 9) & 1; sDe += (cls >> 10) & 1
+      }
+      val nSymbols = Option(text).map(t => t.count(_ == '#').toLong +
+        Iterator.iterate(t.indexOf("..."))(i => t.indexOf("...", i + 3)).takeWhile(_ >= 0).size)
+      (id, lang, nWords, sumLen, nAlpha, nSymbols, java.lang.Long.bitCount(stop).toLong, sEn, sEs, sDe)
+    }).toDF("doc_id", "lang", "n_words", "sum_word_len", "n_alpha_words", "n_symbols",
+      "n_stopwords", "s_en", "s_es", "s_de")
+  }
+
+  /** The Gopher rule flags over [[docStats]] counts ([[gopherRules]], the curation gate). */
+  private[text] def gopherFlags(stats: DataFrame, minWords: Int, maxWords: Int = 100000): DataFrame = {
     require(minWords >= 1 && maxWords >= minWords,
       s"need 1 <= minWords <= maxWords, got $minWords..$maxWords")
-    // toks as a MATERIALIZED attribute ([[tokenized]]): the five
-    // aggregates below reference the token list once each — as a
-    // derived expression column every reference would re-run split()
-    // per row (the SCALING.md optimizer pitfall tokenStats documents)
-    val words = col("toks")
-    val nWords = size(words).cast(LongType)
-    val sumLen = aggregate(transform(words, w => length(w).cast(LongType)),
-      lit(0L), (a, x) => a + x)
-    val nAlpha = size(filter(words, w => w.rlike("[A-Za-z]"))).cast(LongType)
-    // occurrence counts by delete-and-measure; '...' deletes 3 chars
-    // per occurrence so the difference is an exact multiple of 3
-    val nSymbols = (length(col("text")) - length(translate(col("text"), "#", ""))).cast(LongType) +
-      ((length(col("text")) - length(replace(col("text"), lit("...")))) / 3).cast(LongType)
-    // distinct-stopwords-present via a single bitmask fold (bit i =
-    // stopword i seen) — one pass over the token list instead of one
-    // array_contains scan per stopword; OR is order-independent so
-    // any engine's fold order produces the same mask
-    val stopBit = (w: Column) => GopherStopwords.zipWithIndex
-      .map { case (s, i) => when(lower(w) === s, lit(1L << i)).otherwise(lit(0L)) }
-      .reduce(_ + _)
-    val nStop = bit_count(aggregate(words, lit(0L),
-      (a, w) => a.bitwiseOR(stopBit(w)))).cast(LongType)
-    tokenized(documents)
-      .select(col("doc_id"), nWords.as("n_words"), sumLen.as("sum_word_len"),
-        nAlpha.as("n_alpha_words"), nSymbols.as("n_symbols"), nStop.as("n_stopwords"))
+    stats
       .withColumn("ok_word_count",
         col("n_words") >= minWords && col("n_words") <= maxWords)
       .withColumn("ok_mean_len",
@@ -1042,6 +1024,26 @@ object TextOps {
         col("ok_word_count") && col("ok_mean_len") && col("ok_symbol_ratio") &&
           col("ok_alpha_ratio") && col("ok_stopwords"))
   }
+
+  /** Gopher-style document quality rules (Rae et al. 2021 §A1.1):
+    * word count within [minWords, maxWords], mean word length within
+    * [3, 10], symbol-to-word ratio (`#` and ASCII `...`) at most
+    * 1/10, at least 80% of words containing an ASCII letter, and at
+    * least two distinct stopwords present. Paper bounds are 50 to
+    * 100k words.
+    *
+    * Every ratio threshold is evaluated by INTEGER cross-
+    * multiplication (e.g. `5·n_alpha >= 4·n_words`, `3·n <=
+    * sum_len <= 10·n`), so the operator carries no float contract —
+    * the counts and flags hash-match any engine bit-for-bit, and an
+    * empty document can't hit a 0/0 (it just fails the word-count
+    * rule). Shuffle-free: one typed pass ([[docStats]]) plus
+    * codegen'd flag columns. Returns (doc_id, n_words, sum_word_len,
+    * n_alpha_words, n_symbols, n_stopwords, five ok_* flags,
+    * gopher_keep). */
+  def gopherRules(documents: DataFrame, minWords: Int = 50,
+                  maxWords: Int = 100000): DataFrame =
+    gopherFlags(docStats(documents), minWords, maxWords).drop("lang", "s_en", "s_es", "s_de")
 
   /** Control characters to delete in [[normalizeText]]: C0 controls
     * except the whitespace ones handled by [[WsRunRe]] (TAB LF CR —

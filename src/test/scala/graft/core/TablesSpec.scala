@@ -23,6 +23,11 @@ class TablesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/events.parquet")
 
+  test("spreadTable names an unregistered table and the map to edit") {
+    val e = intercept[RuntimeException](Tables.spreadTable(spark, "/nonexistent", "lineitem"))
+    assert(e.getMessage.contains("'lineitem'") && e.getMessage.contains("Tables.spreadTables"))
+  }
+
   test("current testdata normalizes to ns and round-trips through eventsWithTs") {
     val e = Tables.events(spark, "/root/testdata/sf0.001")
     assert(e.schema("ts").dataType == org.apache.spark.sql.types.LongType)

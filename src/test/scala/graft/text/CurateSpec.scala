@@ -1,6 +1,9 @@
 package graft.text
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** The composed pipeline must drop exactly what its stages say it
@@ -50,6 +53,29 @@ class CurateSpec extends SparkSpec {
     val langs = Curate.curationPipeline(df)
       .select("lang_pred").as[String].collect().toSet
     assert(langs == Set("en", "es"))
+  }
+
+  test("one typed decode of the documents and one scoped cache per call") {
+    // the gate and language ID are ONE kernel pass; a re-tokenizing
+    // stage (a second decode) or a re-added post-dedup cache fails here
+    val df = docs((1L, good, "en", "web"), (2L, good, "en", "web"), (3L, "too short", "en", "web"))
+    val before = Dedup.scopedCaches.toArray.toSet
+    val out = Curate.curationPipeline(df)
+    val registered = Dedup.scopedCaches.toArray.toSet -- before
+    out.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val seen = scala.collection.mutable.Set.empty[AnyRef]
+    def decodes(p: SparkPlan): Seq[DeserializeToObjectExec] = helper.flatMap(p) {
+      case d: DeserializeToObjectExec => Seq(d)
+      case s: InMemoryTableScanExec if seen.add(s.relation.cacheBuilder) =>
+        decodes(s.relation.cachedPlan)
+      case _ => Nil
+    }
+    val found = decodes(out.queryExecution.executedPlan)
+    assert(found.size == 1, s"expected one typed decode, found ${found.size}:\n${found.mkString("\n")}")
+    assert(helper.find(found.head)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty,
+      "the decode must read the documents scan, not a cache")
+    assert(registered.size == 1, s"expected one scoped cache, registered ${registered.size}")
   }
 
   test("empty after gating yields an empty accounting table") {
